@@ -3,6 +3,8 @@ compaction planning, pure-theta broadcast join."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
@@ -37,7 +39,7 @@ def test_file_stats_pruning_actually_skips_files(spark, sf_dir):
     # is the content fingerprint the query derives, not md5(sf_dir)
     q_file_stats_pruning(spark, sf_dir).count()
     tag = _fp_tag(sf_dir, "events")
-    back = spark.read.parquet(f"{_SCRATCH}/events_clustered_{tag}")
+    back = spark.read.parquet(os.path.realpath(f"{_SCRATCH}/events_clustered_{tag}"))
     stats = back.groupBy(F.col("_metadata.file_path").alias("f")).agg(
         F.max("ts").alias("max_ts")
     )

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
@@ -28,10 +30,10 @@ def test_partitioned_stream_sink_prunes(spark, sf_dir):
     }
     assert rows == direct
     # reading one partition applies a PartitionFilter, not a full scan
-    from etl_pipeline_project_spark.queries import _fp_tag
+    from etl_pipeline_project_spark.queries import _SCRATCH, _fp_tag
 
     tag = _fp_tag(sf_dir, "events")
-    sink = f"/root/repo/.scratch/stream_part_{tag}/sink"
+    sink = os.path.realpath(f"{_SCRATCH}/stream_part_{tag}") + "/sink"
     one = spark.read.parquet(sink).filter(F.col("event_type") == "click")
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(event_type" in plan or "PartitionFilters: [" in plan

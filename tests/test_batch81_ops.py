@@ -7,18 +7,19 @@ empty (the dedup memory is the persistent signature store).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
+from etl_pipeline_project_spark import queries
 from etl_pipeline_project_spark.operators.dedup_text import minhash_lsh_pairs
 from etl_pipeline_project_spark.queries import _fp_tag, q_stream_neardup
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def _sig_store(sf_dir: str) -> str:
-    return (
-        f"/root/repo/.scratch/stream_neardup_{_fp_tag(sf_dir, 'documents')}"
-        "/signatures"
-    )
+    fixture = f"{queries._SCRATCH}/stream_neardup_{_fp_tag(sf_dir, 'documents')}"
+    return os.path.realpath(fixture) + "/signatures"
 
 
 def _pairs_key(df):

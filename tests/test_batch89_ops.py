@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
+from etl_pipeline_project_spark import queries
 from etl_pipeline_project_spark.queries import _fp_tag, q_state_store_read
 from etl_pipeline_project_spark.sources.readers import load_table
 
@@ -20,7 +23,8 @@ def test_state_store_equals_batch_aggregate(spark, sf_dir):
 
 def test_state_metadata_readable(spark, sf_dir):
     q_state_store_read(spark, sf_dir)
-    ckpt = f"/root/repo/.scratch/state_read_{_fp_tag(sf_dir, 'events')}/ckpt"
+    fixture = f"{queries._SCRATCH}/state_read_{_fp_tag(sf_dir, 'events')}"
+    ckpt = os.path.realpath(fixture) + "/ckpt"
     md = spark.read.format("state-metadata").load(ckpt)
     rows = md.collect()
     assert len(rows) == 1

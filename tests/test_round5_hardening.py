@@ -10,11 +10,17 @@
 4. ``_fp_tag`` only collapses to the path-only 'absent' tag when the file
    is genuinely missing; an unreadable footer still fingerprints by
    size+mtime so regenerated testdata rotates the tag.
+5. ``_staged_fixture`` is the one build-once protocol: a failed build
+   publishes nothing, racing builders share one build, and a published
+   stream checkpoint re-runs in place.
 """
 
 from __future__ import annotations
 
+import ast
 import os
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import pandas as pd
@@ -24,7 +30,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.operators.joins import asof_join_grouped
-from etl_pipeline_project_spark.queries import ORACLE, _fp_tag, q_event_rate_alert
+from etl_pipeline_project_spark import queries
+from etl_pipeline_project_spark.queries import (
+    ORACLE,
+    _fp_tag,
+    _staged_fixture,
+    q_event_rate_alert,
+)
 from etl_pipeline_project_spark.streaming.scd2 import merge_scd2_batch, scd2_state
 
 BIG = 2**53 + 1  # not representable in float64 (rounds to 2**53)
@@ -144,6 +156,133 @@ def test_fp_tag_unreadable_footer_still_fingerprints(tmp_path):
         f.write(b"not a parquet file, regenerated")
     t3 = _fp_tag(sf, "events")
     assert len({t1, t2, t3}) == 3
+
+
+def test_staged_fixture_failed_build_publishes_nothing(tmp_path, monkeypatch):
+    monkeypatch.setattr(queries, "_SCRATCH", str(tmp_path))
+
+    def build(d):
+        os.makedirs(d)
+        with open(f"{d}/half_written", "w") as fh:
+            fh.write("x")
+        raise RuntimeError("interrupted build")
+
+    with pytest.raises(RuntimeError, match="interrupted build"):
+        _staged_fixture("fx", "tag", build)
+    assert os.listdir(tmp_path) == []
+
+
+def test_staged_fixture_racing_builders_share_one_build(tmp_path, monkeypatch):
+    monkeypatch.setattr(queries, "_SCRATCH", str(tmp_path))
+    both_building = threading.Barrier(2)
+
+    def build(d):
+        os.makedirs(d)
+        with open(f"{d}/built_in", "w") as fh:
+            fh.write(os.path.basename(d))
+        both_building.wait(timeout=60)  # neither publishes before both built
+
+    with ThreadPoolExecutor(2) as pool:
+        paths = list(pool.map(lambda _: _staged_fixture("fx", "tag", build), range(2)))
+    assert paths[0] == paths[1]
+    builds = sorted(e for e in os.listdir(tmp_path) if e != "fx_tag")
+    assert builds == [os.path.basename(paths[0])]
+    with open(f"{paths[0]}/built_in") as fh:
+        assert fh.read() == builds[0]
+    # published: a later call reuses the build and creates nothing
+    assert _staged_fixture("fx", "tag", build) == paths[0]
+    assert sorted(os.listdir(tmp_path)) == sorted(["fx_tag", *builds])
+
+
+def test_staged_fixture_stream_checkpoint_reruns_in_place(spark, tmp_path, monkeypatch):
+    """Checkpoints and _spark_metadata record absolute paths: a stream
+    staged by the fixture must re-run from the returned path with nothing
+    new to process, and its sink must stay readable."""
+    monkeypatch.setattr(queries, "_SCRATCH", str(tmp_path))
+    src = spark.range(100).withColumnRenamed("id", "k")
+
+    def run_stream(base):
+        q = (
+            spark.readStream.schema(src.schema)
+            .parquet(f"{base}/stage")
+            .writeStream.format("parquet")
+            .option("path", f"{base}/sink")
+            .option("checkpointLocation", f"{base}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return sum(p["numInputRows"] for p in q.recentProgress)
+
+    def build(d):
+        src.write.parquet(f"{d}/stage")
+        assert run_stream(d) == 100
+
+    base = _staged_fixture("ckpt", "tag", build)
+    assert run_stream(base) == 0
+    assert spark.read.parquet(f"{base}/sink").count() == 100
+
+
+def _qualname(node) -> str:
+    if isinstance(node, ast.Attribute):
+        return f"{_qualname(node.value)}.{node.attr}"
+    return node.id if isinstance(node, ast.Name) else ""
+
+
+def test_queries_build_fixtures_only_through_staged_fixture():
+    """Shape check over queries.py: every registry function that keys a
+    fixture on _fp_tag stages it through _staged_fixture (directly or via
+    _bucketed_scratch_table); no function probes or deletes a _SCRATCH
+    path by hand; no query pins spark.sql.shuffle.partitions."""
+    with open(queries.__file__) as fh:
+        tree = ast.parse(fh.read())
+    problems = []
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        calls = [n for n in ast.walk(fn) if isinstance(n, ast.Call)]
+        called = {_qualname(c.func) for c in calls}
+        is_registry = any(
+            isinstance(d, ast.Call) and _qualname(d.func) == "_q"
+            for d in fn.decorator_list
+        )
+        if (
+            is_registry
+            and "_fp_tag" in called
+            and not called & {"_staged_fixture", "_bucketed_scratch_table"}
+        ):
+            problems.append(f"{fn.name}: _fp_tag without _staged_fixture")
+        scratch = {"_SCRATCH"}  # names bound to a scratch path
+
+        def on_scratch(expr) -> bool:
+            return any(
+                (isinstance(n, ast.Name) and n.id in scratch)
+                or (isinstance(n, ast.Call) and _qualname(n.func) == "_staged_fixture")
+                for n in ast.walk(expr)
+            )
+
+        assigns = [n for n in ast.walk(fn) if isinstance(n, ast.Assign)]
+        for a in sorted(assigns, key=lambda n: n.lineno):
+            if on_scratch(a.value):
+                scratch |= {n.id for t in a.targets for n in ast.walk(t) if isinstance(n, ast.Name)}
+        for c in calls:
+            name = _qualname(c.func)
+            if (
+                fn.name != "_staged_fixture"
+                and name in ("os.path.exists", "shutil.rmtree")
+                and any(on_scratch(a) for a in c.args)
+            ):
+                problems.append(f"{fn.name}:{c.lineno}: {name} on a _SCRATCH path")
+    for c in ast.walk(tree):
+        if (
+            isinstance(c, ast.Call)
+            and _qualname(c.func).endswith("conf.set")
+            and c.args
+            and isinstance(c.args[0], ast.Constant)
+            and c.args[0].value == "spark.sql.shuffle.partitions"
+        ):
+            problems.append(f"line {c.lineno}: spark.sql.shuffle.partitions pin")
+    assert not problems, "\n".join(problems)
 
 
 def test_grouped_map_pandas_guard_trips_on_mega_group(spark, sf_dir):
