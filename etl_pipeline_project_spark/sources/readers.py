@@ -24,6 +24,28 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_pipeline_project_spark.schemas import TESTDATA_SCHEMAS
+from etl_pipeline_project_spark.session import ensure_profile
+
+
+def normalize_timestamps(df: DataFrame, names: list[str]) -> DataFrame:
+    """Make the parquet TIMESTAMP(NANOS) columns ``names`` TimestampType.
+
+    They arrive as long nanos under ``nanosAsLong``, or (Spark 4.1+)
+    natively as TIMESTAMP_NTZ; the event-time operators (withWatermark,
+    unix_micros, window) reject NTZ. Long path: integer µs division (floor,
+    matching DuckDB's nanos→micros truncation; ``div`` keeps it in int64,
+    a double division would lose precision above 2^53 ns). NTZ path: plain
+    cast; the profile's UTC session time zone keeps the wall-clock, so it
+    renders identically to the DuckDB oracles.
+    """
+    types = {f.name: f.dataType for f in df.schema.fields}
+    fixes = {}
+    for name in names:
+        if isinstance(types[name], T.LongType):
+            fixes[name] = F.timestamp_micros(F.expr(f"{name} div 1000"))
+        elif isinstance(types[name], T.TimestampNTZType):
+            fixes[name] = F.col(name).cast(T.TimestampType())
+    return df.withColumns(fixes) if fixes else df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -46,15 +68,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     assumed immutable-once-written (the standard lakehouse contract;
     rewriters create new files).
     """
-    # The driver testdata stores `ts` as parquet TIMESTAMP(NANOS); vanilla
-    # Spark sessions reject that type outright (PARQUET_TYPE_ILLEGAL). The
-    # legacy flag is a *runtime-settable* SQL conf, so set it here rather
-    # than relying on the session builder (session.py) — callers (the
-    # correctness driver, notebooks) routinely hand us their own session.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # timestamp→string renderings (dim_waktu's jam/hari/bulan) must agree
-    # with the UTC-naive DuckDB oracles under any caller session
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # callers (correctness harnesses, notebooks) hand us their own session
+    ensure_profile(spark)
     path = f"{sf_dir}/{name}.parquet"
     try:
         st = os.stat(path)
@@ -79,26 +94,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         missing = set(expected.fieldNames()) - set(got)
         if missing:
             raise ValueError(f"table {name!r} at {sf_dir} is missing columns {sorted(missing)}")
-        # TIMESTAMP(NANOS) parquet columns arrive differently per Spark
-        # version/config: as long nanos under spark.sql.legacy.parquet
-        # .nanosAsLong, or (Spark 4.1+) natively as TIMESTAMP_NTZ. Normalize
-        # both to TimestampType so downstream event-time operators
-        # (withWatermark, unix_micros, window) — which reject NTZ — work
-        # under any caller session. Long path: integer µs division (floor —
-        # matches DuckDB's nanos→micros truncation; `div` keeps it in int64,
-        # a double division would lose precision above 2^53 ns). NTZ path:
-        # plain cast — session tz is pinned to UTC above, so the wall-clock
-        # is preserved and renders identically to the DuckDB oracles.
-        fixes = {}
-        for f in expected.fields:
-            if not isinstance(f.dataType, T.TimestampType):
-                continue
-            if isinstance(got[f.name], T.LongType):
-                fixes[f.name] = F.timestamp_micros(F.expr(f"{f.name} div 1000"))
-            elif isinstance(got[f.name], T.TimestampNTZType):
-                fixes[f.name] = F.col(f.name).cast(T.TimestampType())
-        if fixes:
-            df = df.withColumns(fixes)
+        df = normalize_timestamps(
+            df, [f.name for f in expected.fields if isinstance(f.dataType, T.TimestampType)]
+        )
     if cache is not None:
         cache[path] = (stat_key, df)
     return df
@@ -120,6 +118,7 @@ def read_csv_glob(
     files, and the explicit schema avoids the reference's inference drift
     (SURVEY §1.4 Q2). ``infer=True`` restores inference for exploration only.
     """
+    ensure_profile(spark)  # the CSV timestamps parse in the session time zone
     reader = spark.read.option("header", str(header).lower())
     if infer:
         reader = reader.option("inferSchema", "true")

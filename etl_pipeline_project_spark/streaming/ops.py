@@ -23,55 +23,14 @@ driver-memory id set (Q7).
 from __future__ import annotations
 
 import itertools
-import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_project_spark.session import ensure_profile
+from etl_pipeline_project_spark.sources.readers import normalize_timestamps
+
 _mem_counter = itertools.count()
-
-
-def stream_state_partitions(spark: SparkSession) -> str | None:
-    """State-store parallelism for locally driven streams, or ``None`` for
-    "leave the session's sizing alone". Structured Streaming fixes the
-    number of state partitions at stream start from
-    ``spark.sql.shuffle.partitions``; every micro-batch then pays a
-    per-partition store open/commit, so a 32-partition store on a
-    hundred-row local batch is ~4× pure setup (measured on
-    q_stream_stream_join in round 9: 14 s → 4 s at 8 partitions, zero
-    semantic change — state partitioning is internal to the store).
-    Round 12 centralized that adjudicated pattern for every locally
-    driven stream; round 13 scopes the literal 8 to LOCAL masters only
-    (the measured micro-batch regime). On a cluster the default is to
-    NOT override — a forgotten env var must never pin a 100 TB stream's
-    state store to 8 partitions (r12 verdict item 2); production sizes
-    state to stream throughput via the env override, exactly like any
-    shuffle sizing call."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env is not None:
-        return env
-    if spark.sparkContext.master.startswith("local"):
-        return "8"
-    return None
-
-
-@contextmanager
-def sized_state_store(spark: SparkSession):
-    """Pin spark.sql.shuffle.partitions to the stream-state size for the
-    duration of a stream start+drain, restoring the batch value after.
-    No-op when :func:`stream_state_partitions` declines to size (non-local
-    master, no env override)."""
-    parts = stream_state_partitions(spark)
-    if parts is None:
-        yield
-        return
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,10 +41,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVEY §1.2), and the TIMESTAMP(NANOS) column is normalized exactly as
     the batch reader does (sources/readers.py).
     """
-    # runtime-settable: works under any caller-supplied session (the driver
-    # harness does not build its session through session.py)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    ensure_profile(spark)
     static = spark.read.parquet(f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(static.schema)
@@ -94,17 +50,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # testdata table is a single file
         .load(f"{sf_dir}/events.*")
     )
-    # Normalize the TIMESTAMP(NANOS) event-time column to TimestampType:
-    # long nanos under the legacy conf, TIMESTAMP_NTZ under Spark 4.1+
-    # native reads. Watermarks reject NTZ outright, so this cast is what
-    # makes event-time processing work under any caller session (UTC
-    # session tz above keeps the wall-clock identical to the oracles).
-    ts_type = dict(stream.dtypes)["ts"]
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_timestamps(stream, ["ts"])
 
 
 def stream_dedup_keys(stream: DataFrame, keys: list[str], watermark_col: str = "ts") -> DataFrame:
@@ -139,17 +85,15 @@ def run_to_memory(df: DataFrame, *, output_mode: str = "append") -> DataFrame:
     memory sink and return the final table. Local-test harness only — real
     deployments use a durable sink + checkpoint."""
     name = f"stream_mem_{next(_mem_counter)}"
-    with sized_state_store(df.sparkSession):
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    spark = df.sparkSession
-    return spark.table(name)
+    (
+        df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return df.sparkSession.table(name)
 
 
 def stream_static_enrich(

@@ -9,7 +9,10 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("etl_pipeline_project_spark_tests", shuffle_partitions=8)
+    s = get_spark(
+        "etl_pipeline_project_spark_tests",
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
     yield s
 
 

@@ -233,7 +233,7 @@ def test_queries_build_fixtures_only_through_staged_fixture():
     """Shape check over queries.py: every registry function that keys a
     fixture on _fp_tag stages it through _staged_fixture (directly or via
     _bucketed_scratch_table); no function probes or deletes a _SCRATCH
-    path by hand; no query pins spark.sql.shuffle.partitions."""
+    path by hand."""
     with open(queries.__file__) as fh:
         tree = ast.parse(fh.read())
     problems = []
@@ -273,15 +273,26 @@ def test_queries_build_fixtures_only_through_staged_fixture():
                 and any(on_scratch(a) for a in c.args)
             ):
                 problems.append(f"{fn.name}:{c.lineno}: {name} on a _SCRATCH path")
-    for c in ast.walk(tree):
-        if (
-            isinstance(c, ast.Call)
-            and _qualname(c.func).endswith("conf.set")
-            and c.args
-            and isinstance(c.args[0], ast.Constant)
-            and c.args[0].value == "spark.sql.shuffle.partitions"
-        ):
-            problems.append(f"line {c.lineno}: spark.sql.shuffle.partitions pin")
+    assert not problems, "\n".join(problems)
+
+
+def test_only_session_module_writes_session_confs():
+    """Shape check over the engine package: session.py owns the execution
+    profile, so no other module calls conf.set or conf.unset (a write there
+    would change every other query on the caller's session)."""
+    pkg = os.path.dirname(queries.__file__)
+    problems = []
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path == os.path.join(pkg, "session.py"):
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for c in ast.walk(tree):
+                call = _qualname(c.func) if isinstance(c, ast.Call) else ""
+                if call.endswith(("conf.set", "conf.unset")):
+                    problems.append(f"{os.path.relpath(path, pkg)}:{c.lineno}: {call}")
     assert not problems, "\n".join(problems)
 
 

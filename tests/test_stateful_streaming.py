@@ -38,38 +38,3 @@ def test_stream_session_counts_cover_all_events(spark, sf_dir):
     # every session has at least one event and a real start
     assert out.filter(F.col("n_events") < 1).count() == 0
     assert out.filter(F.col("session_start").isNull()).count() == 0
-
-
-def test_stream_state_partitions_scoping(spark, monkeypatch):
-    """r13: the literal-8 state sizing is scoped to LOCAL masters; on a
-    cluster the default is None (leave the session's sizing alone — a
-    forgotten env var must never pin a 100 TB stream's state store to 8),
-    and the env override wins everywhere."""
-    from types import SimpleNamespace
-
-    from etl_pipeline_project_spark.streaming.ops import stream_state_partitions
-
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
-    # local session (the test fixture) -> the measured micro-batch default
-    assert stream_state_partitions(spark) == "8"
-    # non-local master -> no override
-    fake = SimpleNamespace(sparkContext=SimpleNamespace(master="spark://host:7077"))
-    assert stream_state_partitions(fake) is None
-    fake_yarn = SimpleNamespace(sparkContext=SimpleNamespace(master="yarn"))
-    assert stream_state_partitions(fake_yarn) is None
-    # env override wins everywhere
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "64")
-    assert stream_state_partitions(spark) == "64"
-    assert stream_state_partitions(fake) == "64"
-
-
-def test_sized_state_store_noop_when_unsized(spark, monkeypatch):
-    """sized_state_store must not touch the conf when sizing declines."""
-    import etl_pipeline_project_spark.streaming.ops as ops
-
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
-    monkeypatch.setattr(ops, "stream_state_partitions", lambda s: None)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    with ops.sized_state_store(spark):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
